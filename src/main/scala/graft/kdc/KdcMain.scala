@@ -13,80 +13,69 @@ import org.apache.spark.sql.SparkSession
   * histogram).
   *
   * Usage: KdcMain <input logs (file/dir/glob)> <output dir> [realm]
-  *                [--aligned | --v2] [--recursive] [--scope=k=v[,k=v…]]
-  *                [--report=R]
+  *                [--recursive] [--scope=k=v[,k=v…]] [--report=R]
   *
-  * `--recursive` (with `--v2`) descends nested fleet layouts
-  * (host=…/day=… trees); without it a nested dir fails loudly, like
-  * Hadoop input formats.
+  * Every report reads through the `kdclog` table
+  * ([[graft.kdc.v2.KdcLogTableProvider]], the one KDC parse path):
+  * split-aligned session parsing, including splittable bzip2, with the
+  * realm argument's filter PUSHED into the parse scan, so
+  * foreign-realm sessions are never materialized. The realm filter
+  * sits BEFORE the counters observe node (Catalyst does not push
+  * predicates through CollectMetrics), so with a realm the
+  * `kdc_counters` observation counts in-scope sessions only.
   *
-  * `--scope=k=v[,k=v…]` (requires `--v2`) scopes the report to the
-  * named partition-path values of a `k=v` fleet layout (e.g.
-  * `--scope=day=2015-11-22`): each pair becomes an equality filter on
-  * the layout-discovered partition column, which the V2 planner
-  * evaluates DRIVER-SIDE during split planning — out-of-scope FILES
-  * are never opened (a day-scoped report over a year of logs reads
-  * 1/365th of the bytes). A key the layout does not expose fails
-  * loudly at analysis. Scope values are RAW path-segment strings:
-  * they compare byte-for-byte against the directory segment (no
-  * URL-decoding or unescaping on either side — a percent-encoded
-  * layout is scoped with the encoded form), and a value containing a
-  * comma, the pair separator, cannot be expressed — use a path glob
-  * for such layouts ([[graft.kdc.v2.KdcFileLayout.parseScope]]).
+  * `--recursive` descends nested fleet layouts (host=…/day=… trees);
+  * without it a nested dir fails loudly, like Hadoop input formats.
+  *
+  * `--scope=k=v[,k=v…]` scopes the report to the named partition-path
+  * values of a `k=v` fleet layout (e.g. `--scope=day=2015-11-22`):
+  * each pair becomes an equality filter on the layout-discovered
+  * partition column, which the planner evaluates DRIVER-SIDE during
+  * split planning — out-of-scope FILES are never opened (a day-scoped
+  * report over a year of logs reads 1/365th of the bytes). A key the
+  * layout does not expose fails loudly at analysis. Scope values are
+  * RAW path-segment strings: they compare byte-for-byte against the
+  * directory segment (no URL-decoding or unescaping on either side — a
+  * percent-encoded layout is scoped with the encoded form), and a
+  * value containing a comma, the pair separator, cannot be expressed
+  * — use a path glob for such layouts
+  * ([[graft.kdc.v2.KdcFileLayout.parseScope]]).
   *
   * `--report=R` with R ∈ user (default) | service | errors |
   * user-enctypes | service-enctypes.
-  * `--aligned` selects the zero-shuffle split-aligned source
-  * ([[KdcSource.recordsAligned]]) — best for few huge uncompressed
-  * files; default is shuffle-by-file ([[KdcSource.records]]) —
-  * simplest for fleets, and the path that handles splittable bzip2.
-  * `--v2` reads through the DataSourceV2 table
-  * ([[graft.kdc.v2.KdcLogTableProvider]]): same split alignment as
-  * `--aligned` (incl. splittable bzip2), plus the realm argument's
-  * filter PUSHES into the parse scan (foreign-realm sessions are never
-  * materialized) — the 100 TB posture for scoped reports. To make
-  * that pushdown real the realm filter is applied BEFORE the counters
-  * observe node (Catalyst does not push predicates through
-  * CollectMetrics), so under `--v2` with a realm the counters count
-  * IN-SCOPE sessions only; the RDD paths keep the reference's
-  * all-records counter semantics.
+  *
+  * `--aligned` and `--v2` are accepted, for existing invocations, and
+  * read the same way. Any other `--flag` fails with the usage message.
   */
 object KdcMain {
 
   /** The report frame [[main]] writes, factored out so specs can pin
-    * the executed plan (pushed filters on the `--v2` path). The realm
-    * scopes the dimension the report aggregates — client realm for
-    * user reports, service realm for service reports, nothing for the
-    * error histogram — matching [[KdcQueries.successfulAuths]]/
+    * the executed plan (pushed filters). The realm scopes the
+    * dimension the report aggregates — client realm for user reports,
+    * service realm for service reports, nothing for the error
+    * histogram — matching [[KdcQueries.successfulAuths]]/
     * [[KdcQueries.serviceUses]]; the report functions re-apply the
-    * same predicate (idempotent) for the non-v2 sources. */
+    * same predicate (idempotent). */
   def buildReport(spark: SparkSession, in: String, realm: Option[String],
-                  report: String, useV2: Boolean, aligned: Boolean,
-                  recursive: Boolean = false,
+                  report: String, recursive: Boolean = false,
                   scope: Map[String, String] = Map.empty)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    require(scope.isEmpty || useV2,
-      "--scope filters partition-path columns, which only the --v2 fleet layout exposes")
     val realmPred = realm.flatMap(r => report match {
       case "user" | "user-enctypes" => Some(col("crealm") === r)
       case "service" | "service-enctypes" => Some(col("srealm") === r)
       case _ => None // errors report is unscoped, like the reference's
     })
-    val source =
-      if (useV2) {
-        val df = spark.read.format("kdclog")
-          .option("recursive", recursive.toString).load(in)
-        // scope filters reference layout-discovered partition columns
-        // only, so the V2 planner resolves them to whole-FILE pruning
-        // at split planning (an unknown key fails analysis loudly)
-        val scoped = scope.foldLeft(df) { case (acc, (k, v)) =>
-          acc.filter(col(k) === v)
-        }
-        realmPred.fold(scoped)(scoped.filter)
-          .as(org.apache.spark.sql.Encoders.product[KdcLogRecord])
-      } else if (aligned) KdcSource.recordsAligned(spark, in)
-      else KdcSource.records(spark, in)
+    val df = spark.read.format("kdclog")
+      .option("recursive", recursive.toString).load(in)
+    // scope filters reference layout-discovered partition columns
+    // only, so the planner resolves them to whole-FILE pruning at
+    // split planning (an unknown key fails analysis loudly)
+    val scoped = scope.foldLeft(df) { case (acc, (k, v)) =>
+      acc.filter(col(k) === v)
+    }
+    val source = realmPred.fold(scoped)(scoped.filter)
+      .as(org.apache.spark.sql.Encoders.product[KdcLogRecord])
     val recs = KdcQueries.withCounters(source)
     report match {
       case "user" =>
@@ -108,21 +97,24 @@ object KdcMain {
     }
   }
 
+  private val Usage =
+    "usage: KdcMain <input> <outdir> [realm] [--recursive] [--scope=k=v[,k=v…]] " +
+      "[--report=user|service|errors|user-enctypes|service-enctypes]\n" +
+      "(--aligned and --v2 are accepted and read the same way; with a realm " +
+      "the counters count in-scope sessions only)"
+
+  private def valueFlag(flags: Array[String], name: String): Option[String] =
+    flags.collectFirst { case f if f.startsWith(s"--$name=") => f.stripPrefix(s"--$name=") }
+
   def main(args: Array[String]): Unit = {
     val (flags, positional) = args.partition(_.startsWith("--"))
-    val aligned = flags.contains("--aligned")
-    val report = flags.collectFirst {
-      case f if f.startsWith("--report=") => f.stripPrefix("--report=")
-    }.getOrElse("user")
-    val scope: Map[String, String] = flags.collectFirst {
-      case f if f.startsWith("--scope=") => f.stripPrefix("--scope=")
-    }.map(graft.kdc.v2.KdcFileLayout.parseScope).getOrElse(Map.empty)
-    require(positional.length >= 2,
-      "usage: KdcMain <input> <outdir> [realm] [--aligned | --v2] [--recursive] " +
-        "[--scope=k=v[,k=v…]] [--report=user|service|errors|user-enctypes|service-enctypes]\n" +
-        "note: under --v2 with a realm the counters count IN-SCOPE sessions only " +
-        "(the realm filter pushes into the parse scan); the RDD paths keep the " +
-        "reference's all-records counter semantics")
+    val unknown = flags.filterNot(f => Set("--aligned", "--v2", "--recursive")(f) ||
+      f.startsWith("--report=") || f.startsWith("--scope="))
+    require(unknown.isEmpty, s"unknown flag ${unknown.mkString(" ")}\n$Usage")
+    require(positional.length >= 2, Usage)
+    val report = valueFlag(flags, "report").getOrElse("user")
+    val scope = valueFlag(flags, "scope")
+      .map(graft.kdc.v2.KdcFileLayout.parseScope).getOrElse(Map.empty[String, String])
     val Array(in, out) = positional.take(2)
     val realm = positional.lift(2)
     // only stop the session on exit if this invocation created it —
@@ -139,7 +131,6 @@ object KdcMain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val result = buildReport(spark, in, realm, report,
-      useV2 = flags.contains("--v2"), aligned = aligned,
       recursive = flags.contains("--recursive"), scope = scope)
     // TSV via the shared formatting expression (oracle-checked through
     // kdc_parse_user_report_tsv) rather than the CSV writer — the

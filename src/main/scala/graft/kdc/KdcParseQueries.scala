@@ -23,12 +23,12 @@ import graft.QueryDef
   * trailing partial session that must be dropped
   * (`KDCLogRecordReader.java:317-320`).
   *
-  * Two queries deliberately take different parse paths so BOTH sources
-  * get a driver row: `kdc_parse_user_stats`/`kdc_parse_errors` go
-  * through [[KdcSource.records]] (shuffle-by-file), while
-  * `kdc_parse_service_stats` goes through [[KdcSource.recordsAligned]]
-  * with 256-byte max splits — forcing split boundaries into the middle
-  * of sessions and lines, which the aligned input format must repair.
+  * Every row reads through the one `kdclog` parse path; the rows differ
+  * in how they drive it. `kdc_parse_service_stats` reads with 256-byte
+  * max splits ([[KdcSource.recordsAligned]]), forcing split boundaries
+  * into the middle of sessions and lines, which the aligned reader must
+  * repair; the `_v2*` rows name the format directly and add pushdown,
+  * partition pruning and streaming postures.
   */
 object KdcParseQueries {
 
@@ -174,8 +174,8 @@ object KdcParseQueries {
     root.toString
   }
 
-  /** README #1+#2 over the shuffle-by-file parse path. `sfDir` is
-    * unused: the input is the embedded raw-log fixture. */
+  /** README #1+#2 through the typed [[KdcSource.records]] entry.
+    * `sfDir` is unused: the input is the embedded raw-log fixture. */
   def userStats(spark: SparkSession, sfDir: String): DataFrame =
     KdcQueries.userAuthStats(KdcSource.records(spark, fixtureDir()))
 
@@ -198,8 +198,8 @@ object KdcParseQueries {
   def errorStats(spark: SparkSession, sfDir: String): DataFrame =
     KdcQueries.commonErrors(KdcSource.records(spark, fixtureDir()))
 
-  /** Structured Streaming in the driver's signal: the stateless
-    * preauth-success extractor + windowed per-day/user aggregation
+  /** Structured Streaming in the driver's signal: a `kdclog` tail +
+    * windowed per-day/user count of successful AS sessions
     * ([[graft.streaming.StreamingPipeline.streamingUserAuthCounts]])
     * run over the fixture with an AvailableNow trigger into a memory
     * sink (complete mode, so the final day's window is emitted at
@@ -211,22 +211,20 @@ object KdcParseQueries {
       graft.streaming.StreamingPipeline.streamingUserAuthCounts(spark, fixtureDir()),
       "kdc_stream_user_auth", "complete", Seq("day", "client"))
 
-  /** The TGS branch through the real micro-batch engine: per-file
-    * sessionization as a stateless partition fold + complete-mode
-    * service aggregation ([[graft.streaming.StreamingPipeline.streamingServiceUseStats]]),
-    * AvailableNow trigger, memory sink — the stateFUL (cross-line)
-    * counterpart of the stateless AS-success streaming row above. */
+  /** The TGS branch through the real micro-batch engine: a `kdclog`
+    * tail + complete-mode service aggregation
+    * ([[graft.streaming.StreamingPipeline.streamingServiceUseStats]]),
+    * AvailableNow trigger, memory sink. */
   def serviceStatsStreaming(spark: SparkSession, sfDir: String): DataFrame =
     graft.streaming.StreamingPipeline.runOneShot(
       graft.streaming.StreamingPipeline.streamingServiceUseStats(spark, fixtureDir()),
       "kdc_stream_service_use", "complete", Seq("service"))
 
-  /** README #1+#2 through the DataSourceV2 table (SURVEY §4/§7.3's
-    * 100 TB parse posture): same aggregation, but the scan IS the
-    * split-aligned session parse and the AUTH/validity predicates
-    * push into it (KdcV2Spec pins the pushed filters and the pruned
-    * read schema on the executed plan). Shares
-    * `kdc_parse_user_stats`' oracle verbatim. */
+  /** README #1+#2 with the format named directly (SURVEY §4/§7.3's
+    * 100 TB parse posture): the scan IS the split-aligned session
+    * parse and the AUTH/validity predicates push into it (KdcV2Spec
+    * pins the pushed filters and the pruned read schema on the
+    * executed plan). Shares `kdc_parse_user_stats`' oracle verbatim. */
   def userStatsV2(spark: SparkSession, sfDir: String): DataFrame =
     KdcQueries.userAuthStats(
       spark.read.format("kdclog").load(fixtureDir())
@@ -296,13 +294,15 @@ object KdcParseQueries {
     * at the END of batch N−1, so sentinel 1's batch still flushes with
     * the pre-sentinel watermark and sentinel 2's batch is the one that
     * runs with it in force (the stream_outer_join lesson,
-    * StreamingPipeline.writeOuterSource). Sentinel rows are dropped
-    * AFTER the drain — a pre-watermark filter would be pushed below
-    * the EventTimeWatermark operator and silently stall the flush.
-    * Shares `kdc_parse_user_stats_streaming`'s hand-derived windowed
-    * oracle verbatim. */
+    * StreamingPipeline.writeOuterSource). The count is
+    * [[KdcQueries.dailyUserAuthCounts]], the same one
+    * `kdc_parse_user_stats_streaming` drains in complete mode.
+    * Sentinel rows are dropped AFTER the drain — a pre-watermark filter
+    * would be pushed below the EventTimeWatermark operator and silently
+    * stall the flush. Shares `kdc_parse_user_stats_streaming`'s
+    * hand-derived windowed oracle verbatim. */
   def userStatsV2Watermarked(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     val sentinelUser = "zz-sentinel"
     def sentinelLog(day: String): String = Seq(
       asHeader(s"${day}T00:00:00", sentinelUser, "10.0.0.99"),
@@ -319,16 +319,10 @@ object KdcParseQueries {
     put("host2.log", host2Log)
     put("zz_sentinel1.log", sentinelLog("2030-01-01"))
     put("zz_sentinel2.log", sentinelLog("2030-01-02"))
-    val agg = spark.readStream.format("kdclog")
-      .option("maxFilesPerTrigger", "1").load(path)
-      .filter(col("valid") && col("success") &&
-        col("req_type") === "AUTH" && !col("referral"))
-      .withColumn("ts_time", to_timestamp(col("ts")))
-      .withWatermark("ts_time", "1 hour")
-      .groupBy(window(col("ts_time"), "1 day"), col("client"))
-      .agg(count(lit(1)).as("n_auth"))
-      .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-        col("client"), col("n_auth"))
+    val agg = KdcQueries.dailyUserAuthCounts(
+      spark.readStream.format("kdclog")
+        .option("maxFilesPerTrigger", "1").load(path)
+        .as(org.apache.spark.sql.Encoders.product[KdcLogRecord]))
     graft.streaming.StreamingPipeline.runOneShot(
       agg, "kdc_v2_wm_user_auth", "append", Seq("day", "client"))
       .filter(col("client") =!= sentinelUser)
@@ -380,8 +374,8 @@ object KdcParseQueries {
     KdcQueries.topN(KdcSource.records(spark, fixtureDir()), "client_ip", 5)
 
   /** Hand-derived per-user stats for the fixture — shared VERBATIM by
-    * the RDD-path, V2-path, and V2-streaming rows (one truth, three
-    * parse postures). */
+    * the typed-entry, named-format, pruned and streaming rows (one
+    * truth, four read postures). */
   private val userStatsOracle: String =
     """SELECT * FROM (VALUES
       |  ('alice', '2015-11-22T17:00:00', '2015-11-23T07:00:00', CAST(2 AS BIGINT)),
@@ -391,8 +385,8 @@ object KdcParseQueries {
       |) AS t(client, first_ts, last_ts, n_auth) ORDER BY client""".stripMargin
 
   /** Hand-derived per-day/user windowed auth counts — shared VERBATIM
-    * by the complete-mode text-source row and the append-mode
-    * watermarked V2 row. */
+    * by the complete-mode streaming row and the append-mode
+    * watermarked row. */
   private val userDayOracle: String =
     """SELECT * FROM (VALUES
       |  ('2015-11-22', 'alice', CAST(1 AS BIGINT)),
@@ -427,9 +421,9 @@ object KdcParseQueries {
     "kdc_parse_user_stats" -> QueryDef(userStats, Some(userStatsOracle)),
     // identical pipeline scoped to the home realm: 'visitor' must drop
     "kdc_parse_user_stats_scoped" -> QueryDef(userStatsScoped, Some(userStatsScopedOracle)),
-    // the same two aggregations through the DataSourceV2 parse-as-scan
-    // table (pushed predicates + pruned columns, plan-pinned in
-    // KdcV2Spec) — bit-identical oracles by construction
+    // the same two aggregations with the format named directly
+    // (pushed predicates + pruned columns, plan-pinned in KdcV2Spec)
+    // — bit-identical oracles by construction
     "kdc_parse_user_stats_v2" -> QueryDef(userStatsV2, Some(userStatsOracle)),
     "kdc_parse_user_stats_v2_scoped" -> QueryDef(userStatsV2Scoped, Some(userStatsScopedOracle)),
     // partition-path file pruning over the host=…/day=… fleet layout:

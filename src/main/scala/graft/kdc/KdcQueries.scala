@@ -56,6 +56,18 @@ object KdcQueries {
         count(lit(1)).as("n_auth"))
       .orderBy("client")
 
+  /** Successful AS auths per (day, client) in event-time daily windows
+    * under a 1-hour watermark: a complete-mode drain emits every day,
+    * an append-mode tail emits a day once the watermark has passed it. */
+  def dailyUserAuthCounts(recs: Dataset[KdcLogRecord], realm: Option[String] = None): DataFrame =
+    successfulAuths(recs, realm)
+      .withColumn("ts_time", to_timestamp(col("ts")))
+      .withWatermark("ts_time", "1 hour")
+      .groupBy(window(col("ts_time"), "1 day"), col("client"))
+      .agg(count(lit(1)).as("n_auth"))
+      .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
+        col("client"), col("n_auth"))
+
   /** README #3 + #4: per-service TGS request count and first/last use. */
   def serviceUseStats(recs: Dataset[KdcLogRecord], realm: Option[String] = None): DataFrame =
     serviceUses(recs, realm)

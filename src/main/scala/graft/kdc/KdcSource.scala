@@ -1,97 +1,42 @@
 package graft.kdc
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** Raw Heimdal KDC logs → `Dataset[KdcLogRecord]`.
   *
-  * The reference reads logs through a custom Hadoop `RecordReader` that
-  * seeks to split starts and reads one record past the split end
-  * (`/root/reference/.../KDCLogRecordReader.java:162-232`). Spark's text
-  * source splits at *line* granularity, so a multi-line session can be
-  * torn across two input splits; instead of reimplementing split
-  * alignment we restore per-file line order with one shuffle and fold
-  * whole files ([[Sessionizer.sessionizeByFile]]).
+  * Every batch and streaming KDC read goes through one parse path, the
+  * `kdclog` DataSourceV2 table ([[graft.kdc.v2.KdcLogTableProvider]]).
+  * Its scan is the reference's sessionizing `RecordReader`
+  * (`/root/reference/.../KDCLogRecordReader.java:162-232`):
+  * [[KdcSessionInputFormat]] aligns splits to session boundaries and
+  * reads past the split end, so a single log file (plain or
+  * splittable bzip2) fans out across tasks with no shuffle, and session
+  * state never crosses a file boundary. The functions here are typed
+  * entries onto that table, so callers do not name the format.
   *
-  * Scale posture (100 TB): parallelism of the parse = number of log
-  * files, which for KDC logs (one file per host per day, log-rotated) is
-  * large; the shuffle moves each line exactly once; gzip/bzip2 handled
-  * natively by the text source. The known limit — a single file larger
-  * than one executor's partition budget — is the same operating envelope
-  * as the reference's splittable-bzip2 path, and would be addressed with
-  * split-aligned sessionization (read-past-split-end) as future work,
-  * SURVEY.md §7.4.
+  * [[fromLines]] and [[Sessionizer.sessionize]] stay as the in-memory
+  * reference fold the specs compare the table against.
   */
 object KdcSource {
 
-  /** Scale path: splittable read → repartition by file → in-order fold.
-    *
-    * Line order within a file is restored by sorting on
-    * (split start offset, within-split sequence number): TextInputFormat
-    * assigns every line to exactly one split (the one containing its
-    * first byte, reading past the split end to finish it), splits are
-    * ordered byte ranges of the file, and lines arrive in order within
-    * a split — so (splitStart, seq) is a total per-file line order.
-    * (A `monotonically_increasing_id` ordering is NOT safe here: Spark
-    * packs file splits into partitions sorted by size, so chunks of a
-    * file larger than `maxPartitionBytes` can be visited out of offset
-    * order — that would silently interleave sessions. Split starts are
-    * immune to packing.) The per-LINE reader offsets are deliberately
-    * NOT used: for splittable bzip2 they are stream-internal positions
-    * that overlap across splits (observed empirically), while split
-    * starts stay correct for both plain and splittable-compressed
-    * inputs — which is what gives this path the reference's
-    * splittable-bzip2 coverage (`KDCLogRecordReader.java:179-198`).
-    * Pinned by KdcBzip2Spec on a multi-block single .bz2 file. */
-  def records(spark: SparkSession, path: String): Dataset[KdcLogRecord] = {
-    import spark.implicits._
-    import org.apache.hadoop.io.{LongWritable, Text}
-    import org.apache.hadoop.mapreduce.lib.input.{FileSplit, TextInputFormat}
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val rdd = spark.sparkContext.newAPIHadoopFile(
-        path, classOf[TextInputFormat], classOf[LongWritable], classOf[Text])
-      .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[LongWritable, Text]]
-      .mapPartitionsWithInputSplit { (split, iter) =>
-        val fs = split.asInstanceOf[FileSplit]
-        val file = fs.getPath.toString
-        val splitStart = fs.getStart
-        var seq = 0L
-        iter.map { case (_, text) =>
-          seq += 1
-          (file, splitStart, seq, text.toString)
-        }
-      }
-    spark.createDataset(rdd).toDF("file", "split_start", "seq", "line")
-      .repartition(nParts, $"file")
-      .sortWithinPartitions($"file", $"split_start", $"seq")
-      .select($"file", $"line").as[(String, String)]
-      .mapPartitions(Sessionizer.sessionizeByFile)
-  }
+  /** All sessions under `path` (file, directory or glob). */
+  def records(spark: SparkSession, path: String): Dataset[KdcLogRecord] =
+    recordsAligned(spark, path)
 
-  /** Scale path #2: split-aligned session reading via
-    * [[KdcSessionInputFormat]] — NO shuffle at all; parallelism =
-    * #splits, so a single multi-GB log file fans out across tasks,
-    * including splittable-compressed (.bz2) files via the
-    * probe-aligned [[KdcSessionSplitCompressedRecordReader]]. Each
-    * record arriving from the input format is one complete session
-    * blob, folded independently. Default path for few-huge-files
-    * layouts; [[records]] (shuffle-by-file) remains simplest for
-    * many-file fleets. `maxSplitBytes` exists for tests that force
-    * split boundaries into awkward byte positions. */
+  /** [[records]] with an upper bound on split size, so tests can force
+    * split boundaries into awkward byte positions (the source's
+    * `maxSplitBytes` option). */
   def recordsAligned(spark: SparkSession, path: String,
                      maxSplitBytes: Option[Long] = None): Dataset[KdcLogRecord] = {
-    import spark.implicits._
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    maxSplitBytes.foreach(b =>
-      conf.setLong("mapreduce.input.fileinputformat.split.maxsize", b))
-    val rdd = spark.sparkContext.newAPIHadoopFile(
-      path, classOf[KdcSessionInputFormat],
-      classOf[org.apache.hadoop.io.LongWritable],
-      classOf[org.apache.hadoop.io.Text], conf)
-    spark.createDataset(rdd.map(_._2.toString))
-      .flatMap(blob => Sessionizer.sessionize(blob.linesIterator))
+    val reader = spark.read.format("kdclog")
+    maxSplitBytes.foreach(b => reader.option("maxSplitBytes", b))
+    reader.load(path).as(Encoders.product[KdcLogRecord])
   }
+
+  /** The same sessions as a stream: a `kdclog` tail of `path`,
+    * admitting new files in lexical order. */
+  def stream(spark: SparkSession, path: String): Dataset[KdcLogRecord] =
+    spark.readStream.format("kdclog").load(path).as(Encoders.product[KdcLogRecord])
 
   /** Convenience for tests / small inputs: sessionize pre-collected lines
     * of a single logical file, distributed. */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.kdc.LogLine
+import graft.kdc.{KdcQueries, KdcSource}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -15,10 +15,10 @@ import org.apache.spark.sql.types._
   *  2. stateful running first/last/count per user via
   *     flatMapGroupsWithState (the streaming twin of the UserTime job,
   *     with the same corrected min/max semantics),
-  *  3. stateless KDC line extraction (the streaming twin of the Perl
-  *     mapper's `u:` branch, `/root/reference/perl/kdcmapper.pl:38-41`
-  *     — AS successes are recognizable from a single line, so the
-  *     extract is stateless and the count is a windowed agg).
+  *  3. per-day KDC user auth counts over a `kdclog` tail (the
+  *     streaming twin of the Perl mapper's `u:` branch,
+  *     `/root/reference/perl/kdcmapper.pl:38-41`), a windowed agg over
+  *     the same session records the batch reports read.
   *
   * Scale posture: state is per-key O(1) (three longs), watermark bounds
   * the window state store, and every one-shot driver row runs on the
@@ -267,55 +267,22 @@ object StreamingPipeline {
       }
   }
 
-  /** 3. Streaming KDC auth extraction: classify raw lines, keep
-    * preauth-success events, parse principal + timestamp — stateless,
-    * then aggregate per user. Realm parameterized (the Perl original
-    * hardcodes it). */
-  def authEvents(lines: DataFrame, realm: Option[String] = None): DataFrame = {
-    val principalRe = """([^\s@]+)@([-.A-Za-z0-9]+)"""
-    val tsRe = """^(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})"""
-    val base = lines
-      .filter(col("value").contains("Pre-authentication succeeded"))
-      .select(
-        regexp_extract(col("value"), tsRe, 1).as("ts_str"),
-        regexp_extract(col("value"), s"succeeded -- $principalRe", 1).as("client"),
-        regexp_extract(col("value"), s"succeeded -- $principalRe", 2).as("crealm"))
-      .filter(col("ts_str") =!= "" && col("client") =!= "")
-      .withColumn("ts", to_timestamp(col("ts_str"), "yyyy-MM-dd'T'HH:mm:ss"))
-    realm.fold(base)(r => base.filter(col("crealm") === r))
-  }
-
+  /** 3. Streaming per-day user auth counts over a `kdclog` tail — the
+    * streaming twin of the Perl mapper's `u:` branch
+    * (`/root/reference/perl/kdcmapper.pl:38-41`), counting successful
+    * AS sessions exactly like the batch reports. Realm parameterized
+    * (the Perl original hardcodes it). */
   def streamingUserAuthCounts(s: SparkSession, logDir: String,
                               realm: Option[String] = None): DataFrame =
-    authEvents(s.readStream.text(logDir), realm)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 day"), col("client"))
-      .agg(count(lit(1)).as("n_auth"))
-      .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-        col("client"), col("n_auth"))
+    KdcQueries.dailyUserAuthCounts(KdcSource.stream(s, logDir), realm)
 
   /** 3b. Streaming TGS service-use stats — the Perl mapper's `s:`
-    * branch (`kdcmapper.pl:42-52`), which unlike the `u:` branch is
-    * CROSS-LINE stateful (a TGS-REQ header is only emitted when the
-    * later "sending packet" line confirms it, and errors/referrals in
-    * between cancel it). The state is per-file and line-local, so it
-    * streams as a stateless per-FILE fold: `wholetext` makes each file
-    * ONE source row, so a file can never straddle partitions (a plain
-    * `.text` read splits large files, and a fragment fold would
-    * silently drop the straddling sessions — enforcing the contract
-    * structurally beats documenting it) and the sessionizer folds its
-    * lines exactly like the batch path. No state store; the only
-    * streaming state is the final complete-mode aggregate. Contract:
-    * a file must fit in one row (fleet-of-small-rotated-logs layout;
-    * huge single files belong to the batch aligned reader). */
+    * branch (`kdcmapper.pl:42-52`) over a `kdclog` tail: the scan
+    * sessionizes each admitted file like the batch read, and the only
+    * streaming state is the final complete-mode aggregate. */
   def streamingServiceUseStats(s: SparkSession, logDir: String,
-                               realm: Option[String] = None): DataFrame = {
-    import s.implicits._
-    val recs = s.readStream.option("wholetext", "true").text(logDir)
-      .as[String]
-      .flatMap(txt => graft.kdc.Sessionizer.sessionize(txt.linesIterator))
-    graft.kdc.KdcQueries.serviceUseStats(recs, realm)
-  }
+                               realm: Option[String] = None): DataFrame =
+    KdcQueries.serviceUseStats(KdcSource.stream(s, logDir), realm)
 
   /** 4. Streaming exact dedup: drop re-deliveries of the same content
     * hash arriving within the watermark horizon — the streaming twin

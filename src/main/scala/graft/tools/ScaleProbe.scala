@@ -608,14 +608,10 @@ object ScaleProbe {
     }
 
     // --kdc-scale: parse-path throughput on ONE large synthetic log
-    // file — the few-huge-files layout the split-aligned paths exist
-    // for. Compares (a) shuffle-by-file records() [whole file = one
-    // fold task — the documented limit], (b) recordsAligned()
-    // [byte-aligned splits, zero shuffle], (c) the V2 table full-scan,
-    // (d) the V2 table with realm+reqtype pushdown and (client, ts)
-    // pruning [predicates evaluate on the typed session record BEFORE
-    // row materialization], and (e) the same query with post-parse
-    // Spark filters over (b) — the baseline (d)'s pushdown must beat.
+    // file — the few-huge-files layout split alignment exists for.
+    // Compares the `kdclog` full scan with the same table under
+    // realm+reqtype pushdown and (client, ts) pruning [predicates
+    // evaluate on the typed session record BEFORE row materialization].
     if (args.contains("--kdc-scale")) {
       val nSessions = args.collectFirst {
         case a if a.startsWith("--sessions=") => a.stripPrefix("--sessions=").toInt
@@ -632,17 +628,10 @@ object ScaleProbe {
         }.min
         println(f"KDCSCALE $label,$tMin%.2f")
       }
-      import graft.kdc.KdcSource
       val realm = "SQUILL.DEMENTIA.ORG"
-      time("records_shuffle_by_file")(KdcSource.records(spark, dir).toDF())
-      time("records_aligned")(KdcSource.recordsAligned(spark, dir).toDF())
       time("v2_full_scan")(spark.read.format("kdclog").load(dir))
       time("v2_pushdown_scoped")(
         spark.read.format("kdclog").load(dir)
-          .filter(col("crealm") === realm && col("req_type") === "AUTH")
-          .select(col("client"), col("ts")))
-      time("aligned_postparse_scoped")(
-        KdcSource.recordsAligned(spark, dir).toDF()
           .filter(col("crealm") === realm && col("req_type") === "AUTH")
           .select(col("client"), col("ts")))
       // the splittable-compressed posture: ONE multi-block .bz2 of the

@@ -54,7 +54,7 @@ class KdcAlignedSpec extends AnyFunSuite {
 
   test("multiple split sizes all agree (boundaries land everywhere)") {
     val expectedCount = Sessionizer.sessionize(lines.iterator).size
-    for (sz <- Seq(777L, 1500L, 4096L, 65536L)) {
+    for (sz <- Seq(777L, 1500L, 2048L, 4096L, 65536L)) {
       val n = KdcSource.recordsAligned(spark, s"$dir/big.log",
         maxSplitBytes = Some(sz)).count()
       assert(n == expectedCount, s"splitSize=$sz: $n != $expectedCount")
@@ -71,17 +71,19 @@ class KdcAlignedSpec extends AnyFunSuite {
     assert(n == Sessionizer.sessionize(lines.iterator).size)
   }
 
-  test("shuffle-by-file path survives multi-split files (true offsets)") {
-    // force many splits of one file through the Hadoop reader; the
-    // sort must use true byte offsets — split packing by size would
-    // corrupt a monotonic-id ordering
+  test("session-level split bound: a multi-split file equals the fold") {
+    // the bound comes from the session's Hadoop conf, not a reader
+    // option: split planning must honor it and still repair every
+    // torn session
     val old = spark.sparkContext.hadoopConfiguration
       .get("mapreduce.input.fileinputformat.split.maxsize")
     spark.sparkContext.hadoopConfiguration
       .setLong("mapreduce.input.fileinputformat.split.maxsize", 2048)
     try {
       val expected = Sessionizer.sessionize(lines.iterator).toList
-      val got = KdcSource.records(spark, s"$dir/big.log").collect()
+      val ds = KdcSource.records(spark, s"$dir/big.log")
+      assert(ds.rdd.getNumPartitions > 1, "the session split bound was not applied")
+      val got = ds.collect()
       assert(got.length == expected.length)
       assert(got.groupBy(identity).view.mapValues(_.length).toMap ==
         expected.groupBy(identity).view.mapValues(_.length).toMap)
@@ -94,11 +96,10 @@ class KdcAlignedSpec extends AnyFunSuite {
     }
   }
 
-  test("aligned path agrees with the shuffle-by-file path end to end") {
+  test("aligned read agrees with the in-memory fold end to end") {
     val a = KdcQueries.userAuthStats(
       KdcSource.recordsAligned(spark, s"$dir/big.log", Some(4096))).collect()
-    val b = KdcQueries.userAuthStats(
-      KdcSource.records(spark, s"$dir/big.log")).collect()
-    assert(a.toSeq == b.toSeq)
+    val b = KdcQueries.userAuthStats(KdcSource.fromLines(spark, lines)).collect()
+    assert(a.nonEmpty && a.toSeq == b.toSeq)
   }
 }

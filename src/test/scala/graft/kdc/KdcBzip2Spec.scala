@@ -3,13 +3,13 @@ package graft.kdc
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Splittable-bzip2 coverage for the shuffle-by-file parse path — the
+/** Splittable-bzip2 coverage for the `kdclog` parse path — the
   * equivalent of the reference's `KDCLogRecordReader.java:179-198`
   * splittable-codec handling. A single multi-block .bz2 log is read
   * with small max splits, so multiple tasks decode disjoint compressed
-  * blocks of ONE file; all lines of a block share the reader's
-  * block-offset `pos`, and the within-split `seq` tie-break must
-  * restore exact line order for the sessionizer. */
+  * blocks of ONE file, and the probe-aligned reader must hand every
+  * session to exactly one of them. Both tests compare against the
+  * in-memory fold of the same lines. */
 class KdcBzip2Spec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()

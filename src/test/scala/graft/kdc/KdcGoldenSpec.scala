@@ -97,7 +97,7 @@ class KdcGoldenSpec extends AnyFunSuite {
     assert(spark.read.text(s"$dir/crlf.log").count() == 3)
   }
 
-  test("KdcSource.records shuffle-by-file path agrees with fromLines") {
+  test("KdcSource.records agrees with fromLines per file") {
     val dir = "target/scratch/goldenlogs"
     new java.io.File(dir).mkdirs()
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/a.log"),

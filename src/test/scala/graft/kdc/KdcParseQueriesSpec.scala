@@ -90,9 +90,9 @@ class KdcParseQueriesSpec extends AnyFunSuite {
       "BAD_AUTHENTICATION", "BAD_NAME", "BAD_PARAMETERS", "BAD_PASSWORD",
       "MISSING_PREAUTH", "UNKNOWN", "UNUSABLE_NAME"))
     assert(run("user-enctypes").exists(_.startsWith("plain\tUNK\t1")))
-    // --v2 routes the same report through the DataSourceV2 table with a
-    // scoped realm pushed into the parse: the foreign-realm visitor
-    // must drop, everything else bit-identical to the scoped oracle
+    // --v2 is an accepted spelling of the one read path; the realm is
+    // pushed into the parse: the foreign-realm visitor must drop,
+    // everything else bit-identical to the scoped oracle
     val outV2 = "target/scratch/kdcmain_user_v2"
     KdcMain.main(Array(dir, outV2, "SQUILL.DEMENTIA.ORG", "--v2"))
     val v2Lines = new java.io.File(outV2).listFiles()
@@ -104,12 +104,24 @@ class KdcParseQueriesSpec extends AnyFunSuite {
       "plain\t2015-11-23T08:00:00\t2015-11-23T08:00:00\t1"))
   }
 
-  test("aligned and shuffle-by-file paths agree on the fixture") {
+  test("256-byte splits agree with the in-memory fold on the fixture") {
     val dir = KdcParseQueries.fixtureDir()
-    val a = KdcSource.records(spark, dir).collect().toSet
-    val b = KdcSource.recordsAligned(spark, dir, Some(256L)).collect().toSet
+    val a = KdcSource.recordsAligned(spark, dir, Some(256L)).collect().toSet
+    val b = Seq(KdcParseQueries.host1Log, KdcParseQueries.host2Log)
+      .flatMap(log => KdcSource.fromLines(spark, log.linesIterator.toSeq).collect()).toSet
     // 10 AS sessions (host1, incl. the foreign-realm visitor) + 8 TGS
     // sessions (host2; trailing partial dropped), all field-distinct → 18.
     assert(a == b && a.size == 18)
+  }
+
+  test("KdcMain rejects an unknown flag with the usage message") {
+    val dir = KdcParseQueries.fixtureDir()
+    val out = "target/scratch/kdcmain_typo"
+    val e = intercept[IllegalArgumentException] {
+      KdcMain.main(Array(dir, out, "--reprot=service"))
+    }
+    assert(e.getMessage.contains("--reprot=service") && e.getMessage.contains("usage:"),
+      e.getMessage)
+    assert(!new java.io.File(out).exists(), "a rejected run must write nothing")
   }
 }

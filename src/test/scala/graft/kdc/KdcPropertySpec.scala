@@ -1,15 +1,24 @@
 package graft.kdc
 
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, struct}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-based sessionizer invariants (SURVEY.md §5 test plan #2):
   * random interleavings of session fragments must preserve the
-  * reference's structural guarantees regardless of ordering.
+  * reference's structural guarantees regardless of ordering, in the
+  * fold itself and across file boundaries of a `kdclog` read.
   * (Drives ScalaCheck `Gen` directly — the scalatestplus bridge is not
   * in the offline dependency cache.) */
 class KdcPropertySpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   private def forAll[A](gen: Gen[A], n: Int = 300)(f: A => Unit): Unit =
     (0 until n).foreach { i =>
@@ -19,9 +28,6 @@ class KdcPropertySpec extends AnyFunSuite {
             fail(s"failed for seed=$i input=$a: ${e.getMessage}", e)
         })
     }
-
-  private def forAll[A, B](ga: Gen[A], gb: Gen[B])(f: (A, B) => Unit): Unit =
-    forAll(Gen.zip(ga, gb))(p => f(p._1, p._2))
 
   private val ts = "2015-11-22T15:25:20"
   private val genClient = Gen.oneOf("alice", "bob", "cg2v", "svc_x")
@@ -93,12 +99,37 @@ class KdcPropertySpec extends AnyFunSuite {
   }
 
   test("file-boundary reset: records of a++b == records(a) ++ records(b) per file") {
-    forAll(genLines, genLines) { (a, b) =>
-      val byFile = Sessionizer.sessionizeByFile(
-        (a.map(("fa", _)) ++ b.map(("fb", _))).iterator).toList
+    // one kdclog read over a `pair=i/file=a|b` tree of random file
+    // pairs, plus a fixed pair whose file a ends with a dangling
+    // header: a session left open at the end of file a must never
+    // absorb file b's lines
+    import spark.implicits._
+    val root = new java.io.File("target/scratch/kdc_file_boundary")
+    org.apache.commons.io.FileUtils.deleteDirectory(root)
+    val asHeader = s"$ts AS-REQ %s@EXAMPLE.ORG from IPv4:10.0.0.1 for krbtgt/EXAMPLE.ORG@EXAMPLE.ORG"
+    val sending = s"$ts sending 100 bytes to IPv4:10.0.0.1"
+    val dangling = (
+      List(asHeader.format("cg2v"),
+        s"$ts ENC-TS Pre-authentication succeeded -- cg2v@EXAMPLE.ORG", sending,
+        asHeader.format("dangling")),
+      List(s"$ts TGS-REQ eve@EXAMPLE.ORG from IPv4:10.0.0.1 for host/www@EXAMPLE.ORG", sending))
+    val pairs = dangling +: (0 until 300).flatMap(i =>
+      Gen.zip(genLines, genLines).apply(Gen.Parameters.default, Seed(i.toLong)))
+    for (((a, b), i) <- pairs.zipWithIndex; (file, lines) <- Seq("a" -> a, "b" -> b)) {
+      val f = new java.io.File(root, s"pair=$i/file=$file/kdc.log")
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, lines.mkString("\n").getBytes("UTF-8"))
+    }
+    val recCols = Encoders.product[KdcLogRecord].schema.fieldNames.map(col)
+    val got = spark.read.format("kdclog").option("recursive", "true").load(root.getPath)
+      .select(col("pair"), col("file"), struct(recCols.toSeq: _*))
+      .as[(String, String, KdcLogRecord)].collect()
+      .groupBy(_._1.toInt).view.mapValues(_.sortBy(_._2).map(_._3).toList).toMap
+    assert(got.getOrElse(0, Nil).map(_.client) == List("cg2v", "eve"))
+    for (((a, b), i) <- pairs.zipWithIndex) {
       val separate = Sessionizer.sessionize(a.iterator).toList ++
         Sessionizer.sessionize(b.iterator).toList
-      assert(byFile == separate)
+      assert(got.getOrElse(i, Nil) == separate, s"pair $i: a=$a b=$b")
     }
   }
 }

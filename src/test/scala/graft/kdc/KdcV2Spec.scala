@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.kdc.v2.{KdcScan, KdcScanBuilder, KdcTopN}
 
 /** The DataSourceV2 log table ([[graft.kdc.v2.KdcLogTableProvider]]):
-  * result parity with the RDD-based parse paths, predicate pushdown
+  * result parity with the in-memory fold, predicate pushdown
   * and column pruning reaching the scan, split alignment under
   * adversarial split sizes, and multi-batch streaming admission. */
 class KdcV2Spec extends AnyFunSuite {
@@ -30,6 +30,12 @@ class KdcV2Spec extends AnyFunSuite {
     r.load(fixture)
   }
 
+  /** The fixture's sessions by the in-memory reference fold, per file. */
+  private def folded: org.apache.spark.sql.Dataset[KdcLogRecord] =
+    Seq(KdcParseQueries.host1Log, KdcParseQueries.host2Log)
+      .map(log => KdcSource.fromLines(spark, log.linesIterator.toSeq))
+      .reduce(_ union _)
+
   private def kdcScan(df: DataFrame): KdcScan = {
     val top = df.queryExecution.executedPlan
     // descend into the AQE wrapper when present (agg plans)
@@ -47,11 +53,10 @@ class KdcV2Spec extends AnyFunSuite {
     }
   }
 
-  test("v2 batch read equals the shuffle-by-file parse path") {
+  test("v2 batch read equals the in-memory fold per file") {
     val viaV2 = v2().collect().map(_.toString).sorted.toSeq
-    val viaRdd = KdcSource.records(spark, fixture).toDF()
-      .collect().map(_.toString).sorted.toSeq
-    assert(viaV2 == viaRdd)
+    val viaFold = folded.toDF().collect().map(_.toString).sorted.toSeq
+    assert(viaV2.nonEmpty && viaV2 == viaFold)
   }
 
   test("realm/reqtype predicates and column pruning reach the scan") {
@@ -175,27 +180,24 @@ class KdcV2Spec extends AnyFunSuite {
     // not push predicates through CollectMetrics, so filtering after
     // the observe would evaluate realm post-scan and the advertised
     // never-materialize-foreign-realm posture would be silently lost
-    val q = KdcMain.buildReport(spark, fixture, Some("SQUILL.DEMENTIA.ORG"),
-      "user", useV2 = true, aligned = false)
+    val q = KdcMain.buildReport(spark, fixture, Some("SQUILL.DEMENTIA.ORG"), "user")
     val scan = kdcScan(q)
     assert(scan.pushedFilters.mkString.contains("EqualTo(crealm,SQUILL.DEMENTIA.ORG)"),
       s"realm not pushed on the CLI --v2 plan: ${scan.pushedFilters.mkString(", ")}")
-    // and the report equals the RDD path's scoped report
+    // and the report equals the same scoped report over the in-memory fold
     val viaV2 = q.collect().map(_.toString).toSeq
-    val viaRdd = KdcMain.buildReport(spark, fixture, Some("SQUILL.DEMENTIA.ORG"),
-      "user", useV2 = false, aligned = false).collect().map(_.toString).toSeq
-    assert(viaV2 == viaRdd)
+    val viaFold = KdcQueries.userAuthStats(folded, Some("SQUILL.DEMENTIA.ORG"))
+      .select("client", "first_ts", "last_ts", "n_auth").collect().map(_.toString).toSeq
+    assert(viaV2.nonEmpty && viaV2 == viaFold)
     // service reports scope the SERVICE realm
-    val svc = KdcMain.buildReport(spark, fixture, Some("SQUILL.DEMENTIA.ORG"),
-      "service", useV2 = true, aligned = false)
+    val svc = KdcMain.buildReport(spark, fixture, Some("SQUILL.DEMENTIA.ORG"), "service")
     assert(kdcScan(svc).pushedFilters.mkString.contains("EqualTo(srealm,SQUILL.DEMENTIA.ORG)"))
   }
 
   test("KdcMain --scope: the scoped CLI plans 1/N files and matches the unscoped-filtered TSV") {
     val root = KdcParseQueries.fleetFixtureDir()
     val scoped = KdcMain.buildReport(spark, root, None, "user",
-      useV2 = true, aligned = false, recursive = true,
-      scope = Map("day" -> "2015-11-22"))
+      recursive = true, scope = Map("day" -> "2015-11-22"))
     // the executed plan prunes to the scoped day's ONE file of two
     val scan = kdcScan(scoped)
     assert(scan.pushedFilters.mkString.contains("EqualTo(day,2015-11-22)"),
@@ -211,15 +213,14 @@ class KdcV2Spec extends AnyFunSuite {
     val scopedTsv = KdcQueries.tsvLines(scoped).collect().map(_.getString(0)).sorted
     val wantTsv = KdcQueries.tsvLines(
         KdcMain.buildReport(spark, s"$root/host=hostA/day=2015-11-22/kdc.log",
-          None, "user", useV2 = true, aligned = false))
+          None, "user"))
       .collect().map(_.getString(0)).sorted
     assert(scopedTsv.nonEmpty && scopedTsv.toSeq == wantTsv.toSeq,
       s"scoped TSV diverged:\n${scopedTsv.mkString("\n")}\nvs\n${wantTsv.mkString("\n")}")
-    // scope without --v2 fails loudly — the RDD paths have no
-    // partition columns to filter
-    intercept[IllegalArgumentException] {
+    // a scope key the layout does not expose fails loudly at analysis
+    intercept[org.apache.spark.sql.AnalysisException] {
       KdcMain.buildReport(spark, root, None, "user",
-        useV2 = false, aligned = false, scope = Map("day" -> "x"))
+        recursive = true, scope = Map("rack" -> "x"))
     }
   }
 

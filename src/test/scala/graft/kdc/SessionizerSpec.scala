@@ -177,14 +177,6 @@ class SessionizerSpec extends AnyFunSuite {
     assert(rs(1).client == "eve" && rs(1).success && rs(1).error == null)
   }
 
-  test("sessionizeByFile resets state at file boundaries") {
-    // file A ends with a dangling header; file B is a clean TGS session.
-    val a = happyAsReq.map(("a", _)) ++ Seq(("a", header(client = "dangling")))
-    val b = Seq(("b", header(rt = "TGS-REQ", client = "eve")), ("b", sending)).map(p => (p._1, p._2))
-    val rs = Sessionizer.sessionizeByFile((a ++ b).iterator).toList
-    assert(rs.map(_.client) == List("cg2v", "eve"))
-  }
-
   test("noise-only input yields nothing") {
     assert(Sessionizer.sessionize(Seq("random line", "another").iterator).isEmpty)
   }

@@ -300,21 +300,32 @@ class StreamingPipelineSpec extends AnyFunSuite {
   }
 
   test("streaming KDC auth counts match the Perl-mapper semantics") {
-    import spark.implicits._
+    // the Perl `u:` branch's per-day user keys, counted over complete
+    // AS sessions like every batch report; unlike the Perl mapper,
+    // which matches single lines, an orphan preauth line is not counted
     val logDir = "target/scratch/streamlogs"
-    val lines = Seq(
-      "2015-11-22T15:25:20 ENC-TS Pre-authentication succeeded -- cg2v@SQUILL.DEMENTIA.ORG using aes256",
-      "2015-11-22T16:00:00 ENC-TS Pre-authentication succeeded -- alice@SQUILL.DEMENTIA.ORG",
-      "2015-11-23T08:00:00 ENC-TS Pre-authentication succeeded -- alice@SQUILL.DEMENTIA.ORG",
-      "2015-11-22T15:25:20 AS-REQ cg2v@SQUILL.DEMENTIA.ORG from IPv4:127.0.0.1 for krbtgt/X@Y",
-      "2015-11-22T15:25:20 sending 752 bytes to IPv4:127.0.0.1",
-      "2015-11-22T17:00:00 ENC-TS Pre-authentication succeeded -- bob@OTHER.ORG")
+    val realm = "SQUILL.DEMENTIA.ORG"
+    def asSession(ts: String, user: String, r: String, preauth: Boolean) = Seq(
+      s"$ts AS-REQ $user@$r from IPv4:127.0.0.1 for krbtgt/$r@$r") ++
+      (if (preauth) Seq(s"$ts ENC-TS Pre-authentication succeeded -- $user@$r using aes256")
+       else Nil) :+
+      s"$ts sending 752 bytes to IPv4:127.0.0.1"
+    val lines =
+      asSession("2015-11-22T15:25:20", "cg2v", realm, preauth = true) ++
+      asSession("2015-11-22T16:00:00", "alice", realm, preauth = true) ++
+      asSession("2015-11-23T08:00:00", "alice", realm, preauth = true) ++
+      // no preauth line: MISSING_PREAUTH, not a success
+      asSession("2015-11-22T16:30:00", "cg2v", realm, preauth = false) ++
+      // foreign realm: excluded by the realm argument
+      asSession("2015-11-22T17:00:00", "bob", "OTHER.ORG", preauth = true) ++
+      // an orphan preauth line with no AS-REQ header is no session
+      Seq(s"2015-11-22T18:00:00 ENC-TS Pre-authentication succeeded -- dave@$realm",
+        "2015-11-22T18:00:00 sending 752 bytes to IPv4:127.0.0.1")
     new java.io.File(logDir).mkdirs()
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$logDir/kdc.log"),
       lines.mkString("\n").getBytes)
-    val q = StreamingPipeline.streamingUserAuthCounts(
-        spark, logDir, realm = Some("SQUILL.DEMENTIA.ORG"))
+    val q = StreamingPipeline.streamingUserAuthCounts(spark, logDir, realm = Some(realm))
       .writeStream.outputMode("complete")
       .format("memory").queryName("auth_out")
       .start()
